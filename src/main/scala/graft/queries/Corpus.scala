@@ -1113,13 +1113,13 @@ $langScoreCols
       // engaged and depth are each consumed by SEVERAL downstream
       // stages of ONE plan (engaged: the engEv gate + the Welch units;
       // depth: the funnel tally + the qualification gate), and Spark
-      // cannot share an un-materialized subplan — round 15's plan
-      // computed the session-window aggregation subtree 8x (28 events
-      // scans, 84 session_window nodes in the formatted plan). Cut both
-      // relations once (lazy localCheckpoint, materialized by the first
-      // action — the round-15 Dedup treatment, guide §5): every stage
-      // then reads the few-per-user-rows relations instead of
-      // re-deriving sessionization and the chain cascade per consumer.
+      // cannot share an un-materialized subplan, so each consumer
+      // re-derives sessionization and the chain cascade: the shipped
+      // plan (plans/r16/p36_analytics_demo_after.txt) still holds 28
+      // events scans and 77 session_window nodes in the formatted dump.
+      // Both relations ship UNCUT: localCheckpointing them was measured
+      // (see the fan note above) and was no faster — 3.45 s both cut,
+      // 3.17 s depth only, 3.07 s uncut.
       val engaged = sessions
         .groupBy(col("user_id"))
         .agg(

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** One event of the driver's `events` table shape (TESTDATA.md). */
 final case class EventRow(
@@ -382,6 +383,73 @@ object EventStreams {
     }
   }
 
+  /** Compact an [[upsertSink]] target while the stream is STOPPED:
+    * rewrite the current snapshot minus tombstones older than
+    * `tombstoneHorizon` (keep recent ones — they still fence off
+    * out-of-order stragglers inside the late-data window), then delete
+    * the superseded version directories.
+    *
+    * The compacted directory gets a `_c<n>` suffix on the current
+    * version name: it sorts after its source version but BELOW any
+    * future batch id, so a later restart resumes cleanly and a replayed
+    * old batch can never shadow the compacted state. */
+  def compactSnapshots(
+      spark: org.apache.spark.sql.SparkSession,
+      targetPath: String,
+      isDelete: org.apache.spark.sql.Column,
+      tombstoneHorizon: org.apache.spark.sql.Column,
+      // CRASH-WINDOW test hook (ChaosCheck drill 6): invoked at the
+      // point where the compacted rewrite is COMMITTED (its _SUCCESS
+      // exists) but the superseded versions have not been deleted yet —
+      // a driver death here must leave readers on a consistent snapshot
+      // and a re-run must converge. Production callers leave the
+      // default no-op.
+      onBeforeCleanup: () => Unit = () => ()): Unit = {
+    val current = currentSnapshot(spark, targetPath).getOrElse(
+      throw new IllegalStateException(s"no snapshot under $targetPath"))
+    val compacted = spark.read.parquet(current)
+      .filter(!isDelete || tombstoneHorizon)
+    val name = new org.apache.hadoop.fs.Path(current).getName
+    // Generation is zero-padded (cosmetic now — ordering is numeric via
+    // [[versionKey]], which also handles pre-padding legacy dirs).
+    val (base, gen) = versionKey(name)
+    val dest = f"$targetPath/${base}_c${gen + 1}%04d"
+    compacted.write.mode("overwrite").parquet(dest)
+    onBeforeCleanup()
+    // drop every strictly-older COMMITTED version now that dest is
+    // current (an uncommitted partial dir is left for manual cleanup —
+    // deleting it here could race a writer mid-recovery)
+    val fs = new Path(targetPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val destKey = versionKey(new Path(dest).getName)
+    snapshotVersions(spark, targetPath).map(new Path(_))
+      .filter(p => Ordering[(String, Long)].lt(versionKey(p.getName), destKey))
+      .foreach(fs.delete(_, true))
+  }
+
+  /** One [[upsertSink]] trigger, named so recovery is testable
+    * (ChaosCheck drill 6 replays it under a real executor halt): read
+    * the previous committed snapshot, merge the batch, write the new
+    * version directory. Idempotent per batch id — a replay after a
+    * checkpoint-commit crash rewrites `v_<batchId>` with the same
+    * content. */
+  private[graft] def upsertStep(
+      batch: DataFrame,
+      batchId: Long,
+      targetPath: String,
+      keys: Seq[String],
+      seqCols: Seq[String],
+      isDelete: org.apache.spark.sql.Column): Unit = {
+    val spark = batch.sparkSession
+    val prev = currentSnapshot(spark, targetPath)
+      .map(spark.read.parquet(_))
+    val all = prev.fold(batch)(p => p.unionByName(batch))
+    graft.operators.Incremental
+      .mergeLatest(all, keys, seqCols.map(col), isDelete, keepTombstones = true)
+      .write.mode("overwrite")
+      .parquet(f"$targetPath/v_$batchId%012d")
+  }
+
   /** Exactly-once streaming upsert: fold a CDC change stream into a
     * latest-state parquet snapshot with `foreachBatch` +
     * [[graft.operators.Incremental.mergeLatest]].
@@ -420,76 +488,6 @@ object EventStreams {
     * the merge keys per micro-batch, no global window. Snapshot columns
     * must include `seqCols` and the columns `isDelete` reads (they ride
     * along so later batches can compare recency against them). */
-  /** Compact an [[upsertSink]] target while the stream is STOPPED:
-    * rewrite the current snapshot minus tombstones older than
-    * `tombstoneHorizon` (keep recent ones — they still fence off
-    * out-of-order stragglers inside the late-data window), then delete
-    * the superseded version directories.
-    *
-    * The compacted directory gets a `_c<n>` suffix on the current
-    * version name: it sorts after its source version but BELOW any
-    * future batch id, so a later restart resumes cleanly and a replayed
-    * old batch can never shadow the compacted state. */
-  def compactSnapshots(
-      spark: org.apache.spark.sql.SparkSession,
-      targetPath: String,
-      isDelete: org.apache.spark.sql.Column,
-      tombstoneHorizon: org.apache.spark.sql.Column,
-      // CRASH-WINDOW test hook (ChaosCheck drill 6): invoked at the
-      // point where the compacted rewrite is COMMITTED (its _SUCCESS
-      // exists) but the superseded versions have not been deleted yet —
-      // a driver death here must leave readers on a consistent snapshot
-      // and a re-run must converge. Production callers leave the
-      // default no-op.
-      onBeforeCleanup: () => Unit = () => ()): Unit = {
-    val current = currentSnapshot(spark, targetPath).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $targetPath"))
-    val compacted = spark.read.parquet(current)
-      .filter(!isDelete || tombstoneHorizon)
-    val name = new org.apache.hadoop.fs.Path(current).getName
-    // Generation is zero-padded (cosmetic now — ordering is numeric via
-    // [[versionKey]], which also handles pre-padding legacy dirs).
-    val (base, gen) = versionKey(name)
-    val dest = f"$targetPath/${base}_c${gen + 1}%04d"
-    compacted.write.mode("overwrite").parquet(dest)
-    onBeforeCleanup()
-    // drop every strictly-older COMMITTED version now that dest is
-    // current (an uncommitted partial dir is left for manual cleanup —
-    // deleting it here could race a writer mid-recovery)
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val destKey = versionKey(new org.apache.hadoop.fs.Path(dest).getName)
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v_") &&
-        implicitly[Ordering[(String, Long)]]
-          .lt(versionKey(s.getPath.getName), destKey) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .foreach(s => fs.delete(s.getPath, true))
-  }
-
-  /** One [[upsertSink]] trigger, named so recovery is testable
-    * (ChaosCheck drill 6 replays it under a real executor halt): read
-    * the previous committed snapshot, merge the batch, write the new
-    * version directory. Idempotent per batch id — a replay after a
-    * checkpoint-commit crash rewrites `v_<batchId>` with the same
-    * content. */
-  private[graft] def upsertStep(
-      batch: DataFrame,
-      batchId: Long,
-      targetPath: String,
-      keys: Seq[String],
-      seqCols: Seq[String],
-      isDelete: org.apache.spark.sql.Column): Unit = {
-    val spark = batch.sparkSession
-    val prev = currentSnapshot(spark, targetPath)
-      .map(spark.read.parquet(_))
-    val all = prev.fold(batch)(p => p.unionByName(batch))
-    graft.operators.Incremental
-      .mergeLatest(all, keys, seqCols.map(col), isDelete, keepTombstones = true)
-      .write.mode("overwrite")
-      .parquet(f"$targetPath/v_$batchId%012d")
-  }
-
   def upsertSink(
       changes: DataFrame,
       targetPath: String,
@@ -498,28 +496,66 @@ object EventStreams {
       seqCols: Seq[String],
       isDelete: org.apache.spark.sql.Column)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
+    eachBatch(changes, checkpoint)(
+      upsertStep(_, _, targetPath, keys, seqCols, isDelete))
+
+  /** The one `foreachBatch` shell every sink here runs on: `step`
+    * receives each micro-batch with the id the checkpoint log assigned
+    * it, so a step that writes a directory named by that id is
+    * idempotent under replay. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertStep(batch, batchId, targetPath, keys, seqCols, isDelete)
-      }
+      .foreachBatch(step)
       .start()
+
+  private def batchDir(targetPath: String, batchId: Long): String =
+    f"$targetPath/b_$batchId%012d"
+
+  /** The append-only micro-batch log: run `f` on each micro-batch and
+    * write its result to the batch's own `b_<batchId>` directory under
+    * `targetPath`. Read the log back with [[committedBatches]], fold it
+    * with [[compactBatches]]. Every append face here is a call on it.
+    *
+    * Exactly-once by overwrite-by-id: batch N writes `b_N`; a replay
+    * after crash-recovery rewrites the same directory with the same
+    * content (`f` must be deterministic), and readers union only
+    * `_SUCCESS`-committed directories, so a crash-partial write is
+    * invisible until its replay commits. The checkpoint must live and
+    * die with the target: directory names inherit the batch id.
+    *
+    * Probing a persisted index this way IS the streaming semantics.
+    * When `f` is a pure function of (batch, static index) — e.g.
+    * [[graft.operators.Dedup.incrementalDedupIndexed]],
+    * [[graft.operators.Dedup.probeSpanIndex]],
+    * [[graft.operators.Linkage.probeReferenceIndex]],
+    * [[graft.operators.TfIdf.scoreWithLmIndex]],
+    * [[graft.operators.Similarity.probeIvfIndex]] (with or without its
+    * metadata `filter`) or [[graft.operators.Similarity
+    * .knnClassifyAttached]] over a label-carrying probe — no state store
+    * is needed and batch ≡ stream exactly (pinned in StreamingSpec).
+    * Each trigger probes only its micro-batch, the index is neither
+    * shuffled nor fully scanned, so per-trigger cost scales with the
+    * batch, not the corpus. Index APPENDS between triggers are legal
+    * (the tables re-resolve every trigger) but are a separate
+    * single-writer batch step: folding them into `f` would break replay
+    * idempotence — the `*IngestSink`s below do it with marker fencing
+    * ([[twoPhaseIngest]]). */
+  def batchLog(stream: DataFrame, targetPath: String, checkpoint: String)(
+      f: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      f(batch).write.mode("overwrite").parquet(batchDir(targetPath, batchId))
+    }
 
   /** Streaming face of the AS-OF join (q38's composition): enrich an
     * event STREAM against a static right relation — each left event takes
     * the value columns of the single most recent right row at or before
     * its timestamp ([[graft.operators.Joins.asofJoin]] semantics,
-    * including tolerance and direction).
-    *
-    * Every as-of match is a pure function of (one left row, the static
-    * right relation), so running the batch operator per micro-batch IS
-    * the streaming semantics — no state store, no watermark, and
-    * batch ≡ stream exactly (pinned in StreamingSpec on the q38
-    * fixture). Exactly-once mirrors [[upsertSink]]'s idempotent
-    * versioned-directory pattern, specialized to append: batch N writes
-    * its own `b_N` directory, a replay after crash-recovery rewrites the
-    * same directory with the same content, and readers
-    * ([[asofEnriched]]) union only `_SUCCESS`-committed directories.
+    * including tolerance and direction). Every as-of match is a pure
+    * function of (one left row, the static right relation), so this is a
+    * [[batchLog]] and batch ≡ stream exactly (pinned in StreamingSpec on
+    * the q38 fixture); read the output with [[committedBatches]].
     *
     * Scale shape per trigger: the right side is first pruned to the
     * micro-batch's key set (a broadcast left-semi join — batch keys are
@@ -540,27 +576,19 @@ object EventStreams {
       targetPath: String,
       checkpoint: String,
       toleranceSeconds: Option[Long] = None,
-      direction: String = "backward")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rightPruned = right.join(
-          broadcast(batch.select(keys.map(col): _*).distinct()),
-          keys, "left_semi")
-        graft.operators.Joins
-          .asofJoin(batch, rightPruned, keys, tsCol, valueCols,
-            toleranceSeconds, direction)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      direction: String = "backward"): StreamingQuery =
+    batchLog(events, targetPath, checkpoint) { batch =>
+      val rightPruned = right.join(
+        broadcast(batch.select(keys.map(col): _*).distinct()),
+        keys, "left_semi")
+      graft.operators.Joins.asofJoin(batch, rightPruned, keys, tsCol,
+        valueCols, toleranceSeconds, direction)
+    }
 
-  /** All COMMITTED `b_<batchId>` output directories of an append-style
-    * sink ([[asofEnrichSink]], [[dedupProbeSink]], [[ivfProbeSink]]) as
-    * one relation — same `_SUCCESS` gating as [[currentSnapshot]]: a
-    * crash-partial batch directory is invisible until its replay
-    * commits. */
+  /** All COMMITTED `b_<batchId>` output directories of a [[batchLog]]
+    * target as one relation — same `_SUCCESS` gating as
+    * [[currentSnapshot]]: a crash-partial batch directory is invisible
+    * until its replay commits. */
   def committedBatches(
       spark: org.apache.spark.sql.SparkSession,
       targetPath: String): DataFrame = {
@@ -585,11 +613,7 @@ object EventStreams {
       val listing =
         if (!fs.exists(root)) Seq.empty[org.apache.hadoop.fs.FileStatus]
         else fs.listStatus(root).toSeq
-      val upTo = listing
-        .filter(s => !s.isDirectory && s.getPath.getName.startsWith("m_"))
-        .map(s => batchId(s.getPath.getName))
-        .filter(_ >= 0)
-        .maxOption
+      val upTo = compactionUpTo(listing)
       val liveDirs = listing
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("b_") &&
           batchId(s.getPath.getName) > upTo.getOrElse(-1L))
@@ -625,24 +649,21 @@ object EventStreams {
   }
 
   private def batchId(name: String): Long =
-    try name.dropWhile(_ != '_').drop(1).toLong catch { case _: Throwable => -1L }
+    name.dropWhile(_ != '_').drop(1).toLongOption.getOrElse(-1L)
 
-  /** Highest committed compaction horizon: the max `m_<upTo>` marker.
-    * Marker files are empty — the NAME is the whole payload, so commit
-    * is a single atomic file creation (no content to torn-write). */
-  private def compactionUpTo(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
+  /** Highest committed compaction horizon in one directory `listing`:
+    * the max `m_<upTo>` marker. Marker files are empty — the NAME is the
+    * whole payload, so commit is a single atomic file creation (no
+    * content to torn-write). */
+  private def compactionUpTo(listing: Seq[FileStatus]): Option[Long] =
+    listing
       .filter(s => !s.isDirectory && s.getPath.getName.startsWith("m_"))
       .map(s => batchId(s.getPath.getName))
       .filter(_ >= 0)
       .maxOption
 
   /** Compact an append-only `b_<batchId>` micro-batch log (every
-    * `foreachBatch` ingest face writes one — funnel, EWMA, experiment,
-    * session, span, dedup probes) into one `c_<upTo>` directory: the
+    * [[batchLog]] face writes one) into one `c_<upTo>` directory: the
     * operational answer to the small-files problem a months-old 100 TB
     * stream accumulates (one tiny parquet dir per trigger makes the
     * readout's planning/listing cost grow without bound).
@@ -678,8 +699,9 @@ object EventStreams {
     val root = new org.apache.hadoop.fs.Path(targetPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return None
-    val prevUpTo = compactionUpTo(fs, root)
-    val live = fs.listStatus(root).toSeq
+    val listing = fs.listStatus(root).toSeq
+    val prevUpTo = compactionUpTo(listing)
+    val live = listing
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("b_") &&
         batchId(s.getPath.getName) > prevUpTo.getOrElse(-1L) &&
         fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
@@ -711,9 +733,8 @@ object EventStreams {
   /** Streaming ingest face of the experimentation readout
     * ([[graft.operators.Experiments]]): each micro-batch pre-aggregates
     * its events to (group, arm, unit, Σy, Σx) partial metric rows —
-    * unit-cardinality-bounded, NOT event-cardinality — written as the
-    * usual idempotent `b_<batchId>` directories (overwrite-by-id makes
-    * replays absorb). Because the unit collapse is ADDITIVE, feeding
+    * unit-cardinality-bounded, NOT event-cardinality — appended to a
+    * [[batchLog]]. Because the unit collapse is ADDITIVE, feeding
     * the committed partials back through `welchAbTest`/`cupedAbTest`
     * (which re-collapses per unit across batches before any moment is
     * taken) yields EXACTLY the one-shot batch answer — pinned in
@@ -730,19 +751,12 @@ object EventStreams {
       yQCol: String,
       xQCol: String,
       targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(col(groupCol), col(armCol), col(unitCol))
-          .agg(
-            sum(col(yQCol).cast("long")).as(yQCol),
-            sum(col(xQCol).cast("long")).as(xQCol))
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    batchLog(events, targetPath, checkpoint)(
+      _.groupBy(col(groupCol), col(armCol), col(unitCol))
+        .agg(
+          sum(col(yQCol).cast("long")).as(yQCol),
+          sum(col(xQCol).cast("long")).as(xQCol)))
 
   /** CUPED readout over an [[experimentIngestSink]] target: the
     * committed per-batch unit partials ARE valid operator input (the
@@ -761,143 +775,55 @@ object EventStreams {
       committedBatches(spark, targetPath),
       groupCol, armCol, unitCol, yQCol, xQCol)
 
-  /** All COMMITTED [[asofEnrichSink]] output batches as one relation. */
-  def asofEnriched(
-      spark: org.apache.spark.sql.SparkSession,
-      targetPath: String): DataFrame = committedBatches(spark, targetPath)
-
-  /** Streaming probe face of the PERSISTED dedup index (p10's
-    * [[graft.operators.Dedup.incrementalDedupIndexed]] per micro-batch):
-    * classify a document STREAM against a [[graft.operators.Dedup
-    * .writeDedupIndex]] table — each trigger probes ONLY its micro-batch
-    * (batch side broadcasts into every index join; the index is neither
-    * shuffled nor fully scanned), so per-trigger cost scales with the
-    * batch, not the corpus. Every probe is a pure function of (batch,
-    * index state), so running the batch operator per micro-batch IS the
-    * streaming semantics — no state store, batch ≡ stream exactly
-    * (pinned in StreamingSpec). Exactly-once via the idempotent
-    * `b_<batchId>` directory pattern of [[asofEnrichSink]]; read the
-    * results with [[committedBatches]]. Index APPENDS between triggers
-    * are legal (the table re-resolves every trigger) but are a separate
-    * single-writer batch step ([[graft.operators.Dedup
-    * .appendDedupIndex]]) — folding appends into the sink itself would
-    * break replay idempotence. */
-  def dedupProbeSink(
-      docs: DataFrame,
-      table: String,
-      idCol: String,
-      textCol: String,
-      targetPath: String,
-      checkpoint: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      seed: Long = 42L,
-      tau: Double = 0.4): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup
-          .incrementalDedupIndexed(batch.sparkSession, table, batch,
-            idCol, textCol, shingleSize, numHashes, bands, seed, tau)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
-
-  /** Streaming probe face of the persisted linkage reference
-    * ([[graft.operators.Linkage.probeReferenceIndex]] per micro-batch):
-    * arriving records link against the block-bucketed master set —
-    * the entity-resolution service loop (new signups matched against
-    * the customer master as they arrive). Each trigger pays one
-    * block-keyed shuffle of ITS BATCH only; the reference is read in
-    * bucket layout, never redistributed. Scores are a pure function of
-    * (batch, reference), so each committed `b_<batchId>` directory
-    * equals the batch operator on the same rows — idempotent under
-    * replay via overwrite-by-id. */
-  def linkageProbeSink(
-      records: DataFrame,
-      table: String,
-      idCol: String,
-      blockCols: Seq[String],
-      fields: Seq[graft.operators.Linkage.FieldSpec],
-      lower: Double,
-      upper: Double,
-      targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Linkage
-          .probeReferenceIndex(batch.sparkSession, table, batch,
-            idCol, blockCols, fields, lower, upper)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
-
-  /** Streaming scoring face of the PERSISTED stupid-backoff LM index
-    * ([[graft.operators.TfIdf.scoreWithLmIndex]] per micro-batch):
-    * score a document STREAM against [[graft.operators.TfIdf
-    * .writeLmIndex]] count tables — each trigger probes ONLY its
-    * micro-batch (eval trigrams shuffle into the tables' bucketing;
-    * the index is never repartitioned), so per-trigger cost scales
-    * with the batch, not the train corpus. Every score is a pure
-    * function of (batch, count tables), so running the batch operator
-    * per micro-batch IS the streaming semantics — no state store,
-    * batch ≡ stream exactly (pinned in StreamingSpec). Exactly-once
-    * via the idempotent `b_<batchId>` directory pattern of
-    * [[asofEnrichSink]]; read results with [[committedBatches]]. Index
-    * APPENDS between triggers are legal (the tables re-resolve every
-    * trigger; counts are additive) but remain a separate single-writer
-    * batch step ([[graft.operators.TfIdf.appendLmIndex]]). */
-  def lmProbeSink(
-      docs: DataFrame,
-      table: String,
-      idCol: String,
-      textCol: String,
-      targetPath: String,
-      checkpoint: String,
-      alpha: Double = 0.4): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TfIdf
-          .scoreWithLmIndex(batch.sparkSession, table, batch,
-            idCol, textCol, alpha)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
-
-  /** The FULL continual-ingest loop over a persisted dedup index —
-    * [[dedupProbeSink]] plus index MAINTENANCE: each micro-batch is
-    * (1) classified against the CURRENT index (written to the
-    * idempotent `b_<batchId>` directory, as in [[dedupProbeSink]]), then
-    * (2) its NOVEL documents are appended to the index
-    * ([[graft.operators.Dedup.appendDedupIndex]]) so batch N+1 detects
-    * batch N's novel documents as duplicates (pinned in StreamingSpec).
+  /** Two-phase ingest step over a persisted index — the crash-recovery
+    * contract of every `*IngestSink`: (1) `classify` the batch against
+    * the CURRENT index and commit the result to the batch's `b_<batchId>`
+    * directory; (2) `append` to the index, given the COMMITTED
+    * classification read back from that directory.
     *
-    * Crash-recovery semantics (the reason append lives HERE as a
-    * guarded second step rather than in a second query): each step is
-    * fenced by its own marker — the classification by the directory's
-    * `_SUCCESS`, the append by `_appended_<batchId>` — so a replay
-    * re-runs exactly the missing steps. The classification is never
-    * recomputed once committed (after the append, the pre-append index
-    * state it was derived from no longer exists); the novel set feeding
-    * the append is read back from the COMMITTED classification, so it
-    * is stable across replays. A crash in the middle of the append
-    * itself can leave the batch's band/text rows appended twice —
-    * classifications are unaffected (the probe aggregates with
-    * min/distinct, which absorb duplicate index rows); storage for that
-    * one batch doubles, an accepted cost of marker-based fencing
-    * without a transactional table format. Single-writer, like every
-    * index append. */
-  /** One [[dedupIngestSink]] trigger, named so recovery is testable:
-    * re-invoking with the same (batch, batchId) — a checkpoint replay —
-    * is a no-op when both markers exist, and re-runs exactly the
-    * missing steps otherwise (StreamingSpec executes the replay and the
-    * marker-missing-after-append crash shape directly). */
+    * Each phase is fenced by its own marker — the classification by the
+    * directory's `_SUCCESS`, the append by `_appended_<batchId>` — so a
+    * replay (re-invoking with the same batch and id) re-runs exactly the
+    * missing phases and is a no-op when both markers exist. The
+    * classification is never recomputed once committed (after the
+    * append, the pre-append index state it was derived from no longer
+    * exists); reading the append's input back from the committed
+    * classification keeps it stable across replays. A crash in the
+    * middle of the append itself re-runs the whole append: the index
+    * must absorb that (each `*IngestStep` says how). Single-writer, like
+    * every index append. StreamingSpec executes the replay and the
+    * marker-lost-after-append shape for every step directly. */
+  private[graft] def twoPhaseIngest(
+      batch: DataFrame,
+      batchId: Long,
+      targetPath: String)(
+      classify: DataFrame => DataFrame,
+      append: DataFrame => Unit): Unit = {
+    val spark = batch.sparkSession
+    val dir = new Path(batchDir(targetPath, batchId))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(new Path(dir, "_SUCCESS")))
+      classify(batch).write.mode("overwrite").parquet(dir.toString)
+    val marker = new Path(f"$targetPath/_appended_$batchId%012d")
+    if (!fs.exists(marker)) {
+      append(spark.read.parquet(dir.toString))
+      fs.create(marker).close()
+    }
+  }
+
+  /** The rows of `batch` its committed classification marked novel. */
+  private def novelRows(batch: DataFrame, committed: DataFrame, idCol: String): DataFrame =
+    batch.join(
+      committed.filter(col("status") === "novel").select(col(idCol)),
+      Seq(idCol), "left_semi")
+
+  /** One [[dedupIngestSink]] trigger, named so recovery is testable
+    * ([[twoPhaseIngest]]). A crash in the middle of the append can leave
+    * the batch's band/text rows appended twice — classifications are
+    * unaffected (the probe aggregates with min/distinct, which absorb
+    * duplicate index rows); storage for that one batch doubles, an
+    * accepted cost of marker-based fencing without a transactional
+    * table format. */
   private[graft] def dedupIngestStep(
       table: String,
       batch: DataFrame,
@@ -912,26 +838,25 @@ object EventStreams {
       seed: Long,
       tau: Double): Unit = {
     val spark = batch.sparkSession
-    val bid = f"$batchId%012d"
-    val dir = new org.apache.hadoop.fs.Path(s"$targetPath/b_$bid")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      graft.operators.Dedup
-        .incrementalDedupIndexed(spark, table, batch,
-          idCol, textCol, shingleSize, numHashes, bands, seed, tau)
-        .write.mode("overwrite").parquet(dir.toString)
-    val marker = new org.apache.hadoop.fs.Path(s"$targetPath/_appended_$bid")
-    if (!fs.exists(marker)) {
-      val novel = batch.join(
-        spark.read.parquet(dir.toString)
-          .filter(col("status") === "novel").select(col(idCol)),
-        Seq(idCol), "left_semi")
-      graft.operators.Dedup.appendDedupIndex(spark, table, novel,
-        idCol, textCol, numBuckets, shingleSize, numHashes, bands, seed)
-      fs.create(marker).close()
-    }
+    twoPhaseIngest(batch, batchId, targetPath)(
+      graft.operators.Dedup.incrementalDedupIndexed(spark, table, _,
+        idCol, textCol, shingleSize, numHashes, bands, seed, tau),
+      committed => graft.operators.Dedup.appendDedupIndex(spark, table,
+        novelRows(batch, committed, idCol),
+        idCol, textCol, numBuckets, shingleSize, numHashes, bands, seed))
   }
 
+  /** The FULL continual-ingest loop over a persisted dedup index —
+    * the [[graft.operators.Dedup.incrementalDedupIndexed]] probe plus
+    * index MAINTENANCE: each micro-batch is (1) classified against the
+    * CURRENT index and committed to its `b_<batchId>` directory (read
+    * with [[committedBatches]]), then (2) its NOVEL documents are
+    * appended to the index
+    * ([[graft.operators.Dedup.appendDedupIndex]]) so batch N+1
+    * detects batch N's novel documents as duplicates (pinned in
+    * StreamingSpec). Append lives HERE as a guarded second phase rather
+    * than in a second query so that recovery is marker-fenced
+    * ([[twoPhaseIngest]]). */
   def dedupIngestSink(
       docs: DataFrame,
       table: String,
@@ -944,32 +869,17 @@ object EventStreams {
       numHashes: Int = 64,
       bands: Int = 16,
       seed: Long = 42L,
-      tau: Double = 0.4): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIngestStep(table, batch, batchId, idCol, textCol, targetPath,
-          numBuckets, shingleSize, numHashes, bands, seed, tau)
-      }
-      .start()
+      tau: Double = 0.4): StreamingQuery =
+    eachBatch(docs, checkpoint)(
+      dedupIngestStep(table, _, _, idCol, textCol, targetPath,
+        numBuckets, shingleSize, numHashes, bands, seed, tau))
 
-  /** The IVF counterpart of [[dedupIngestSink]] — continual vector
-    * ingest with index maintenance: each micro-batch of NEW vectors is
-    * (1) classified against the CURRENT index (nearest neighbor via
-    * [[graft.operators.Similarity.probeIvfIndex]] with k = 1; cosine >=
-    * `tau` → `near_dup` of that neighbor, else `novel`), committed to
-    * the idempotent `b_<batchId>` directory; then (2) the batch's novel
-    * vectors are appended to the index ([[graft.operators.Similarity
-    * .appendIvfIndex]], fixed build centroids) so batch N+1 detects
-    * near-copies of batch N's novel vectors (pinned in StreamingSpec).
-    * Same marker-fenced crash-recovery contract as [[dedupIngestSink]]:
-    * classification is never recomputed once committed, the novel set
-    * feeding the append is read back from the committed classification,
-    * and a mid-append crash can duplicate index rows for that one batch
-    * — probe top-k is unaffected (duplicate neighbors collapse to the
-    * same (id, cosine); `row_number` keeps one). Single-writer. */
-  /** One [[ivfIngestSink]] trigger, named so recovery is testable —
-    * see [[dedupIngestStep]]. */
+  /** One [[ivfIngestSink]] trigger, named so recovery is testable
+    * ([[twoPhaseIngest]]). A mid-append crash can duplicate index rows
+    * for that one batch. This step's own k = 1 classification is
+    * unaffected (both copies carry the same (id, cosine) and
+    * `row_number` keeps one), but a k > 1 probe of the index returns
+    * the duplicated vector at two ranks. */
   private[graft] def ivfIngestStep(
       table: String,
       batch: DataFrame,
@@ -980,40 +890,36 @@ object EventStreams {
       nProbe: Int,
       tau: Double,
       targetPath: String,
-      numBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val bid = f"$batchId%012d"
-    val dir = new org.apache.hadoop.fs.Path(s"$targetPath/b_$bid")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
-      val nn = graft.operators.Similarity
-        .probeIvfIndex(spark, table, batch, idCol, vecCol,
-          k = 1, centroids = centroids, nProbe = nProbe)
-        .select(
-          col("query_id").as(idCol),
-          col("neighbor_id"), col("cosine"))
-      batch.select(col(idCol))
-        .join(nn, Seq(idCol), "left")
-        .select(
-          col(idCol),
-          when(col("cosine") >= tau, lit("near_dup"))
-            .otherwise(lit("novel")).as("status"),
-          when(col("cosine") >= tau, col("neighbor_id")).as("dup_of"),
-          col("cosine"))
-        .write.mode("overwrite").parquet(dir.toString)
-    }
-    val marker = new org.apache.hadoop.fs.Path(s"$targetPath/_appended_$bid")
-    if (!fs.exists(marker)) {
-      val novel = batch.join(
-        spark.read.parquet(dir.toString)
-          .filter(col("status") === "novel").select(col(idCol)),
-        Seq(idCol), "left_semi")
-      graft.operators.Similarity.appendIvfIndex(
-        table, novel, idCol, vecCol, centroids, numBuckets)
-      fs.create(marker).close()
-    }
-  }
+      numBuckets: Int): Unit =
+    twoPhaseIngest(batch, batchId, targetPath)(
+      { b =>
+        val nn = graft.operators.Similarity
+          .probeIvfIndex(b.sparkSession, table, b, idCol, vecCol,
+            k = 1, centroids = centroids, nProbe = nProbe)
+          .select(col("query_id").as(idCol), col("neighbor_id"), col("cosine"))
+        b.select(col(idCol))
+          .join(nn, Seq(idCol), "left")
+          .select(
+            col(idCol),
+            when(col("cosine") >= tau, lit("near_dup"))
+              .otherwise(lit("novel")).as("status"),
+            when(col("cosine") >= tau, col("neighbor_id")).as("dup_of"),
+            col("cosine"))
+      },
+      committed => graft.operators.Similarity.appendIvfIndex(
+        table, novelRows(batch, committed, idCol), idCol, vecCol,
+        centroids, numBuckets))
 
+  /** The IVF counterpart of [[dedupIngestSink]] — continual vector
+    * ingest with index maintenance: each micro-batch of NEW vectors is
+    * (1) classified against the CURRENT index (nearest neighbor via
+    * [[graft.operators.Similarity.probeIvfIndex]] with k = 1; cosine >=
+    * `tau` → `near_dup` of that neighbor, else `novel`), then (2) the
+    * batch's novel vectors are appended to the index
+    * ([[graft.operators.Similarity.appendIvfIndex]], fixed build
+    * centroids) so batch N+1 detects near-copies of batch N's novel
+    * vectors (pinned in StreamingSpec). Same marker-fenced recovery
+    * ([[twoPhaseIngest]]). */
   def ivfIngestSink(
       vectors: DataFrame,
       table: String,
@@ -1024,20 +930,24 @@ object EventStreams {
       tau: Double,
       targetPath: String,
       checkpoint: String,
-      numBuckets: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfIngestStep(table, batch, batchId, idCol, vecCol, centroids,
-          nProbe, tau, targetPath, numBuckets)
-      }
-      .start()
+      numBuckets: Int = 32): StreamingQuery =
+    eachBatch(vectors, checkpoint)(
+      ivfIngestStep(table, _, _, idCol, vecCol, centroids,
+        nProbe, tau, targetPath, numBuckets))
+
+  /** Histogram binning the stats sink uses for per-document token
+    * counts — FROZEN by contract: sketches from every batch and every
+    * day must stay mergeable, so the binning comes from domain
+    * knowledge, never from the data. */
+  final val StatsHistLo = 0L
+  final val StatsHistHi = 4096L
+  final val StatsHistBins = 256
 
   /** Streaming face of the incremental-statistics pattern (p17): each
     * micro-batch REDUCES to one tiny row per group — persisted HLL
     * register bytes ([[graft.functions.expressions.HllSketch]]) of the
-    * text hash, plus exact doc/token counts — written to the idempotent
-    * `b_<batchId>` directory. Raw text is read exactly once, at ingest;
+    * text hash, plus exact doc/token counts — appended to a
+    * [[batchLog]]. Raw text is read exactly once, at ingest;
     * every later distinct-count/volume question is answered from the
     * sketch table alone ([[corpusStats]]), never rescanning a byte of
     * corpus. Because HLL union is a register max (associative,
@@ -1048,38 +958,25 @@ object EventStreams {
     * gating as every append sink here. Per-trigger output is
     * |groups| rows of ~300 bytes — the 100 TB dashboard costs one
     * aggregation of the micro-batch, nothing downstream. */
-  /** Histogram binning the stats sink uses for per-document token
-    * counts — FROZEN by contract: sketches from every batch and every
-    * day must stay mergeable, so the binning comes from domain
-    * knowledge, never from the data. */
-  final val StatsHistLo = 0L
-  final val StatsHistHi = 4096L
-  final val StatsHistBins = 256
-
   def corpusStatsSink(
       docs: DataFrame,
       groupCol: String,
       textCol: String,
       targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val nt = graft.functions.TextFunctions
-          .tokenCount(col(textCol)).cast("long")
-        batch
-          .groupBy(col(groupCol))
-          .agg(
-            graft.functions.expressions.HllSketch(
-              xxhash64(col(textCol))).as("sk"),
-            graft.functions.expressions.Hist.sketch(
-              nt, StatsHistLo, StatsHistHi, StatsHistBins).as("hk"),
-            count(lit(1)).as("n_docs"),
-            sum(nt).as("n_tokens"))
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    batchLog(docs, targetPath, checkpoint) { batch =>
+      val nt = graft.functions.TextFunctions
+        .tokenCount(col(textCol)).cast("long")
+      batch
+        .groupBy(col(groupCol))
+        .agg(
+          graft.functions.expressions.HllSketch(
+            xxhash64(col(textCol))).as("sk"),
+          graft.functions.expressions.Hist.sketch(
+            nt, StatsHistLo, StatsHistHi, StatsHistBins).as("hk"),
+          count(lit(1)).as("n_docs"),
+          sum(nt).as("n_tokens"))
+    }
 
   /** Fold a [[corpusStatsSink]] target into the live per-group
     * dashboard: union the persisted sketches, estimate + read token-
@@ -1105,45 +1002,9 @@ object EventStreams {
         Hist.quantileOf(col("hk"), lit(900000L), StatsHistLo, StatsHistHi))
   }
 
-  /** Streaming probe face of the PERSISTED span index (d18's
-    * [[graft.operators.Dedup.probeSpanIndex]] per micro-batch): each
-    * trigger reports which parts of its documents already exist
-    * verbatim in the corpus — stateless, idempotent `b_<batchId>`
-    * directories, batch ≡ stream exactly like [[dedupProbeSink]]
-    * (pinned in StreamingSpec); read results with
-    * [[committedBatches]]. `windowTokens` MUST match the build. */
-  def spanProbeSink(
-      docs: DataFrame,
-      table: String,
-      idCol: String,
-      textCol: String,
-      targetPath: String,
-      checkpoint: String,
-      windowTokens: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup
-          .probeSpanIndex(batch.sparkSession, table, batch,
-            idCol, textCol, windowTokens)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
-
-  /** The span-index counterpart of [[dedupIngestSink]] — continual
-    * ingest with index maintenance: each micro-batch is (1) profiled
-    * against the CURRENT corpus window set (committed to the idempotent
-    * `b_<batchId>` directory), then (2) ALL its windows are appended
-    * ([[graft.operators.Dedup.appendSpanIndex]] keeps only hashes not
-    * already present), so batch N+1 reports batch N's content as
-    * corpus-duplicated (pinned in StreamingSpec). Same marker-fenced
-    * two-step recovery as [[dedupIngestSink]], with one simplification:
-    * a replayed append is naturally a no-op at the hash level (the
-    * presence check excludes everything the crashed attempt committed),
-    * so not even transient row duplication is possible. Single-writer. */
-  /** One [[spanIngestSink]] trigger, named so recovery is testable —
-    * see [[dedupIngestStep]]; here even a marker-lost re-append is a
+  /** One [[spanIngestSink]] trigger, named so recovery is testable
+    * ([[twoPhaseIngest]]). The append takes ALL the batch's windows and
+    * ignores the classification; even a marker-lost re-append is a
     * row-level no-op (the presence check excludes committed hashes),
     * which StreamingSpec asserts directly. */
   private[graft] def spanIngestStep(
@@ -1156,21 +1017,24 @@ object EventStreams {
       windowTokens: Int,
       numBuckets: Int): Unit = {
     val spark = batch.sparkSession
-    val bid = f"$batchId%012d"
-    val dir = new org.apache.hadoop.fs.Path(s"$targetPath/b_$bid")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      graft.operators.Dedup
-        .probeSpanIndex(spark, table, batch, idCol, textCol, windowTokens)
-        .write.mode("overwrite").parquet(dir.toString)
-    val marker = new org.apache.hadoop.fs.Path(s"$targetPath/_appended_$bid")
-    if (!fs.exists(marker)) {
-      graft.operators.Dedup.appendSpanIndex(
-        spark, table, batch, idCol, textCol, windowTokens, numBuckets)
-      fs.create(marker).close()
-    }
+    twoPhaseIngest(batch, batchId, targetPath)(
+      graft.operators.Dedup.probeSpanIndex(spark, table, _, idCol, textCol,
+        windowTokens),
+      _ => graft.operators.Dedup.appendSpanIndex(
+        spark, table, batch, idCol, textCol, windowTokens, numBuckets))
   }
 
+  /** The span-index counterpart of [[dedupIngestSink]] — continual
+    * ingest with index maintenance: each micro-batch is (1) profiled
+    * against the CURRENT corpus window set
+    * ([[graft.operators.Dedup.probeSpanIndex]]), then (2) ALL its
+    * windows are appended ([[graft.operators.Dedup.appendSpanIndex]]
+    * keeps only hashes not already present), so batch N+1 reports
+    * batch N's content as corpus-duplicated (pinned in StreamingSpec).
+    * Same marker-fenced recovery ([[twoPhaseIngest]]); here a replayed
+    * append is naturally a no-op at the hash level, so not even
+    * transient row duplication is possible. `windowTokens` MUST match
+    * the index build. */
   def spanIngestSink(
       docs: DataFrame,
       table: String,
@@ -1179,91 +1043,15 @@ object EventStreams {
       targetPath: String,
       checkpoint: String,
       windowTokens: Int = 8,
-      numBuckets: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanIngestStep(table, batch, batchId, idCol, textCol, targetPath,
-          windowTokens, numBuckets)
-      }
-      .start()
-
-  /** Streaming probe face of the PERSISTED IVF index (s05's
-    * [[graft.operators.Similarity.probeIvfIndex]] per micro-batch): a
-    * QUERY-VECTOR stream probes the cell-bucketed index — per trigger,
-    * only |batch|×nProbe cells are read (literal bucket pruning), the
-    * query side broadcasts, and the index never shuffles. Stateless and
-    * idempotent exactly like [[dedupProbeSink]]; batch ≡ stream pinned
-    * in StreamingSpec. `filter` passes a metadata predicate over the
-    * index's attrCols into the pruned scan (s13's filtered vector
-    * search, served streaming — pinned in StreamingSpec). */
-  def ivfProbeSink(
-      queries: DataFrame,
-      table: String,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Array[(Long, Seq[Double])],
-      nProbe: Int,
-      targetPath: String,
-      checkpoint: String,
-      filter: Option[org.apache.spark.sql.Column] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity
-          .probeIvfIndex(batch.sparkSession, table, batch,
-            idCol, vecCol, k, centroids, nProbe, filter)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
-
-  /** Streaming AUTO-LABELING face — [[graft.operators.Similarity
-    * .knnClassify]] over the persisted IVF index, per micro-batch: a
-    * stream of new vectors takes the cosine-weighted majority label of
-    * its k nearest indexed neighbors (s14's serving loop, live). The
-    * index must carry `labelCol` as an attrCol
-    * ([[graft.operators.Similarity.writeIvfIndex]]'s `attrCols`): the
-    * label RIDES the probe's bucket-pruned scan (`passAttrs`), so there
-    * is no label join, no second index read, and the probe keeps its
-    * zero-index-shuffle shape; the vote adds one batch-bounded keyed
-    * tally per trigger. Stateless and
-    * idempotent like [[ivfProbeSink]]; batch ≡ stream pinned in
-    * StreamingSpec. Index APPENDS between triggers are legal and make
-    * later batches see new labeled neighbors — the continual-labeling
-    * loop. */
-  def knnClassifySink(
-      queries: DataFrame,
-      table: String,
-      idCol: String,
-      vecCol: String,
-      labelCol: String,
-      k: Int,
-      centroids: Array[(Long, Seq[Double])],
-      nProbe: Int,
-      targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity
-          .knnClassifyAttached(
-            graft.operators.Similarity.probeIvfIndex(batch.sparkSession,
-              table, batch, idCol, vecCol, k, centroids, nProbe,
-              passAttrs = Seq(labelCol)),
-            labelCol)
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      numBuckets: Int = 32): StreamingQuery =
+    eachBatch(docs, checkpoint)(
+      spanIngestStep(table, _, _, idCol, textCol, targetPath,
+        windowTokens, numBuckets))
 
   /** Streaming ingest face of the N-step funnel
     * ([[graft.operators.Funnel.funnel]]): each micro-batch appends its
     * funnel-RELEVANT events — (user, step type, event time), non-step
-    * events dropped at the trigger — as an idempotent `b_<batchId>`
-    * directory, exactly the [[asofEnrichSink]] append discipline.
+    * events dropped at the trigger — to a [[batchLog]].
     *
     * The append-only log IS the funnel state: the greedy chain is
     * order-sensitive and a LATE event can re-route every later match,
@@ -1287,20 +1075,13 @@ object EventStreams {
       tsCol: String,
       steps: Seq[String],
       targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     require(steps.nonEmpty && steps.distinct == steps,
       s"funnel steps must be non-empty and distinct: $steps")
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .filter(col(userCol).isNotNull && col(typeCol).isin(steps: _*))
-          .select(col(userCol).as("user"), col(typeCol).as("step"),
-            col(tsCol).as("ts"))
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+    batchLog(events, targetPath, checkpoint)(
+      _.filter(col(userCol).isNotNull && col(typeCol).isin(steps: _*))
+        .select(col(userCol).as("user"), col(typeCol).as("step"),
+          col(tsCol).as("ts")))
   }
 
   /** The live funnel readout over a [[funnelIngestSink]] target: the
@@ -1320,8 +1101,7 @@ object EventStreams {
     * can re-cut its session and rewrite the adjacency around it, so
     * per-(from, to) counts are not an additive log. The per-user EVENT
     * multiset, however, is a commutative monoid — so the sink logs the
-    * four columns the operators need, idempotently per micro-batch
-    * (`b_<batchId>` + `_SUCCESS` fencing via [[committedBatches]]), and
+    * four columns the operators need to a [[batchLog]], and
     * the readouts re-derive sessions from the union: stream-then-read ≡
     * one batch call under ARBITRARY late arrival, bit for bit (pinned
     * in StreamingSpec). Storage is event-proportional, the readout one
@@ -1333,18 +1113,11 @@ object EventStreams {
       tsCol: String,
       idCol: String,
       targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .filter(col(userCol).isNotNull)
-          .select(col(userCol).as("user"), col(typeCol).as("event_type"),
-            col(tsCol).as("ts"), col(idCol).as("event_id"))
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    batchLog(events, targetPath, checkpoint)(
+      _.filter(col(userCol).isNotNull)
+        .select(col(userCol).as("user"), col(typeCol).as("event_type"),
+          col(tsCol).as("ts"), col(idCol).as("event_id")))
 
   /** Live Markov transition readout over a [[sessionLogSink]] target:
     * the batch operator, verbatim, over every committed micro-batch. */
@@ -1370,8 +1143,8 @@ object EventStreams {
 
   /** Streaming ingest face of the EWMA spike detector
     * ([[graft.operators.TimeSeries.ewmaSpikes]]): each micro-batch
-    * appends its (key, epoch-hour, count) PARTIAL tallies as an
-    * idempotent `b_<batchId>` directory. Hourly counts are an additive
+    * appends its (key, epoch-hour, count) PARTIAL tallies to a
+    * [[batchLog]]. Hourly counts are an additive
     * commutative monoid, so the log stays batch-proportional (tally
     * rows, never events) and ORDER-free: however events split across
     * triggers — including late arrivals into hours that already have
@@ -1386,20 +1159,13 @@ object EventStreams {
       keyCol: String,
       tsCol: String,
       targetPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .filter(col(keyCol).isNotNull)
-          .select(col(keyCol).as("key"),
-            expr(s"unix_micros($tsCol) div 3600000000").as("hour"))
-          .groupBy(col("key"), col("hour"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite")
-          .parquet(f"$targetPath/b_$batchId%012d")
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    batchLog(events, targetPath, checkpoint)(
+      _.filter(col(keyCol).isNotNull)
+        .select(col(keyCol).as("key"),
+          expr(s"unix_micros($tsCol) div 3600000000").as("hour"))
+        .groupBy(col("key"), col("hour"))
+        .agg(count(lit(1)).as("cnt")))
 
   /** The live spike readout over an [[ewmaIngestSink]] target: re-sum
     * the partial tallies per (key, hour) — additive, so late partials

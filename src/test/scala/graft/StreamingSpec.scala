@@ -158,7 +158,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), col("ts"),
         round(col("value"), 6).as("v"), round(col("purchase_value"), 6).as("pv"))
       .orderBy("event_id").collect().map(_.toSeq).toSeq
-    val streamed = canon(EventStreams.asofEnriched(spark, target))
+    val streamed = canon(EventStreams.committedBatches(spark, target))
     val batch = canon(graft.operators.Joins.asofJoin(
       clicks, purchases, Seq("user_id"), "ts", Seq("purchase_value")))
     assert(streamed.size == batch.size && streamed == batch)
@@ -246,6 +246,9 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == direct)
   }
 
+  // The six probe cases below are named after the per-index sinks they
+  // first pinned; each now runs its batch operator through batchLog,
+  // which is the whole of such a sink, and the names stay as test ids.
   test("linkageProbeSink: streamed record batches equal the batch linkage (d26 fixture)") {
     import graft.operators.Linkage
     import graft.operators.Linkage.FieldSpec
@@ -270,9 +273,9 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
       val target = Files.createTempDirectory("graft-linksink-out").toString
-      val q = EventStreams.linkageProbeSink(
-        stream, "link_sink_spec", "id", Seq("nat"), fields,
-        lower = 0.0, upper = 5.0, target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        Linkage.probeReferenceIndex(b.sparkSession, "link_sink_spec", b,
+          "id", Seq("nat"), fields, lower = 0.0, upper = 5.0))
       try q.processAllAvailable() finally q.stop()
       val nBatches = EventStreams.committedBatches(spark, target)
         .select(input_file_name()).distinct().count()
@@ -301,8 +304,9 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
       val target = Files.createTempDirectory("graft-dedsink-out").toString
-      val q = EventStreams.dedupProbeSink(
-        stream, "ded_sink_spec", "doc_id", "text", target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        graft.operators.Dedup.incrementalDedupIndexed(
+          b.sparkSession, "ded_sink_spec", b, "doc_id", "text"))
       try q.processAllAvailable() finally q.stop()
       // a crash-partial batch dir (no _SUCCESS) must stay invisible —
       // its junk file would otherwise break the parquet read outright
@@ -339,8 +343,8 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
       val target = Files.createTempDirectory("graft-lmsink-out").toString
-      val q = EventStreams.lmProbeSink(
-        stream, "lm_sink_spec", "doc_id", "text", target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        TfIdf.scoreWithLmIndex(b.sparkSession, "lm_sink_spec", b, "doc_id", "text"))
       try q.processAllAvailable() finally q.stop()
       val fs = new org.apache.hadoop.fs.Path(target)
         .getFileSystem(spark.sessionState.newHadoopConf())
@@ -374,9 +378,10 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
       val target = Files.createTempDirectory("graft-ivfsink-out").toString
-      val q = EventStreams.ivfProbeSink(
-        stream, "ivf_sink_spec", "vec_id", "embedding", k = 5,
-        centroids = centroids, nProbe = 6, target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        graft.operators.Similarity.probeIvfIndex(b.sparkSession,
+          "ivf_sink_spec", b, "vec_id", "embedding", k = 5,
+          centroids = centroids, nProbe = 6))
       try q.processAllAvailable() finally q.stop()
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
@@ -385,15 +390,15 @@ class StreamingSpec extends SparkSpec {
         spark, "ivf_sink_spec", queries, "vec_id", "embedding",
         k = 5, centroids = centroids, nProbe = 6))
       assert(streamed.nonEmpty && streamed == batchRun)
-      // the FILTERED serving face (s13 streamed): same sink with a
+      // the FILTERED serving face (s13 streamed): same probe with a
       // metadata predicate — streamed output equals the filtered batch
       // probe, and every neighbor satisfies the predicate
       val pred = col("label") % 3 === 1
       val target2 = Files.createTempDirectory("graft-ivfsink-flt").toString
-      val q2 = EventStreams.ivfProbeSink(
-        stream, "ivf_sink_spec", "vec_id", "embedding", k = 5,
-        centroids = centroids, nProbe = 6, target2, checkpoint(),
-        filter = Some(pred))
+      val q2 = EventStreams.batchLog(stream, target2, checkpoint())(b =>
+        graft.operators.Similarity.probeIvfIndex(b.sparkSession,
+          "ivf_sink_spec", b, "vec_id", "embedding", k = 5,
+          centroids = centroids, nProbe = 6, filter = Some(pred)))
       try q2.processAllAvailable() finally q2.stop()
       val streamedF = canon(EventStreams.committedBatches(spark, target2))
       val batchF = canon(graft.operators.Similarity.probeIvfIndex(
@@ -422,9 +427,12 @@ class StreamingSpec extends SparkSpec {
       val stream = spark.readStream.schema(queries.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
       val target = Files.createTempDirectory("graft-cls-out").toString
-      val q = EventStreams.knnClassifySink(
-        stream, "ivf_cls_sink", "vec_id", "embedding", "label", k = 10,
-        centroids = centroids, nProbe = 8, target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        graft.operators.Similarity.knnClassifyAttached(
+          graft.operators.Similarity.probeIvfIndex(b.sparkSession,
+            "ivf_cls_sink", b, "vec_id", "embedding", k = 10,
+            centroids = centroids, nProbe = 8, passAttrs = Seq("label")),
+          "label"))
       try q.processAllAvailable() finally q.stop()
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("query_id").collect().map(_.toSeq).toSeq
@@ -503,8 +511,9 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
       val target = Files.createTempDirectory("graft-spansink-out").toString
-      val q = EventStreams.spanProbeSink(
-        stream, "span_sink_spec", "doc_id", "text", target, checkpoint())
+      val q = EventStreams.batchLog(stream, target, checkpoint())(b =>
+        graft.operators.Dedup.probeSpanIndex(
+          b.sparkSession, "span_sink_spec", b, "doc_id", "text"))
       try q.processAllAvailable() finally q.stop()
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("doc_id").collect().map(_.toSeq).toSeq
@@ -572,8 +581,16 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeSpanIndex(
       seedCorpus, "doc_id", "text", "span_rec_spec",
       windowTokens = 3, numBuckets = 2)
+    val vecSeed = Seq(
+      (1L, Seq(1.0f, 0.0f, 0.0f)),
+      (2L, Seq(0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val centroids = graft.operators.Similarity
+      .sampleCentroids(vecSeed, "vec_id", "embedding", nCells = 2)
+    graft.operators.Similarity.writeIvfIndex(
+      vecSeed, "vec_id", "embedding", centroids, "ivf_rec_spec", numBuckets = 2)
     val dedTarget = Files.createTempDirectory("graft-dedrec-out").toString
     val spanTarget = Files.createTempDirectory("graft-spanrec-out").toString
+    val ivfTarget = Files.createTempDirectory("graft-ivfrec-out").toString
     try {
       val batch = Seq(
         (100L, "fresh material alpha beta gamma delta epsilon"),
@@ -586,32 +603,60 @@ class StreamingSpec extends SparkSpec {
       def spanStep() = EventStreams.spanIngestStep(
         "span_rec_spec", batch, 0L, "doc_id", "text", spanTarget,
         windowTokens = 3, numBuckets = 2)
+      // 100 is novel (orthogonal to the seed); 101 near-dups seed 1
+      val vecBatch = Seq(
+        (100L, Seq(0.0f, 0.0f, 1.0f)),
+        (101L, Seq(0.99f, 0.1f, 0.0f))).toDF("vec_id", "embedding")
+      def ivfStep() = EventStreams.ivfIngestStep(
+        "ivf_rec_spec", vecBatch, 0L, "vec_id", "embedding", centroids,
+        nProbe = 2, tau = 0.95, ivfTarget, numBuckets = 2)
       def classifications() = EventStreams.committedBatches(spark, dedTarget)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      dedStep(); spanStep()
+      def ivfClassifications() = EventStreams.committedBatches(spark, ivfTarget)
+        .orderBy("vec_id").collect().map(_.toSeq).toSeq
+      dedStep(); spanStep(); ivfStep()
       val class1 = classifications()
+      val ivfClass1 = ivfClassifications()
+      assert(ivfClass1.map(r => (r(0), r(1), r(2))) ==
+        Seq((100L, "novel", null), (101L, "near_dup", 1L)), ivfClass1)
       val dedRows = spark.table("ded_rec_spec_bands").count()
       val spanRows = spark.table("span_rec_spec_spans").count()
+      val ivfRows = spark.table("ivf_rec_spec").count()
+      assert(ivfRows == 3L, "only the novel vector is appended")
       // checkpoint replay: both markers exist -> byte-level no-op
-      dedStep(); spanStep()
+      dedStep(); spanStep(); ivfStep()
       assert(classifications() == class1)
+      assert(ivfClassifications() == ivfClass1)
       assert(spark.table("ded_rec_spec_bands").count() == dedRows)
       assert(spark.table("span_rec_spec_spans").count() == spanRows)
+      assert(spark.table("ivf_rec_spec").count() == ivfRows)
       // crash between append and marker: the replay re-runs the append.
       // Span index: a row-level no-op (presence check excludes committed
-      // hashes). Dedup index: band/text rows may double for the batch,
-      // but classifications are unaffected (min/distinct absorb them) —
-      // exactly the documented recovery contract.
+      // hashes). Dedup and IVF indexes: the batch's rows may double, but
+      // classifications are unaffected (dedup's min/distinct and the
+      // IVF step's k = 1 probe absorb them) — exactly the documented
+      // recovery contract.
       def rmMarker(target: String): Unit = {
         val p = new org.apache.hadoop.fs.Path(s"$target/_appended_000000000000")
         val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
         assert(fs.delete(p, false))
       }
-      rmMarker(dedTarget); rmMarker(spanTarget)
-      dedStep(); spanStep()
+      rmMarker(dedTarget); rmMarker(spanTarget); rmMarker(ivfTarget)
+      dedStep(); spanStep(); ivfStep()
       assert(spark.table("span_rec_spec_spans").count() == spanRows,
         "span re-append must not add rows")
       assert(classifications() == class1, "classifications must survive re-append")
+      assert(ivfClassifications() == ivfClass1,
+        "IVF classifications must survive re-append")
+      // and a NEW vector probing the re-appended IVF index finds vector
+      // 100 as its one nearest neighbor (duplicate rows absorbed)
+      val ivfProbe = graft.operators.Similarity.probeIvfIndex(
+        spark, "ivf_rec_spec",
+        Seq((300L, Seq(0.01f, 0.01f, 0.999f))).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", k = 1, centroids = centroids, nProbe = 2)
+        .collect()
+      assert(ivfProbe.length == 1 &&
+        ivfProbe.head.getAs[Long]("neighbor_id") == 100L, ivfProbe.toSeq.toString)
       // and a NEW batch probing the re-appended dedup index classifies
       // doc 100's text as owned by 100 exactly once (duplicates absorbed)
       val probe = Seq((300L, "fresh material alpha beta gamma delta epsilon"))
@@ -624,6 +669,7 @@ class StreamingSpec extends SparkSpec {
       Seq("_exact", "_bands", "_texts").foreach(s =>
         spark.sql(s"DROP TABLE IF EXISTS ded_rec_spec$s"))
       spark.sql("DROP TABLE IF EXISTS span_rec_spec_spans")
+      spark.sql("DROP TABLE IF EXISTS ivf_rec_spec")
     }
   }
 
@@ -1218,6 +1264,42 @@ class StreamingSpec extends SparkSpec {
     // row per (key, hour) it saw
     val log0 = spark.read.parquet(s"$target/b_000000000000")
     assert(log0.count() == log0.select("key", "hour").distinct().count())
+  }
+
+  test("batchLog restart: a stopped face resumes on its checkpoint; readout equals one batch call") {
+    import spark.implicits._
+    def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
+    val b1 = Seq(("a", t(0, 10)), ("b", t(1, 0)))
+    val b2 = Seq(("a", t(0, 40)), ("a", t(2, 5)))
+    // after the restart: a late event into hour 0 and a new hour
+    val b3 = Seq(("b", t(0, 59)), ("a", t(3, 0)))
+    val input = MemoryStream[(String, Timestamp)](spark)
+    val target = Files.createTempDirectory("graft-restart-out").toString
+    val ckpt = checkpoint()
+    def sink() = EventStreams.ewmaIngestSink(
+      input.toDF.toDF("k", "ts"), "k", "ts", target, ckpt)
+    val q = sink()
+    try {
+      input.addData(b1); q.processAllAvailable()
+      input.addData(b2); q.processAllAvailable()
+    } finally q.stop()
+    // same checkpoint, same MemoryStream instance (a fresh one cannot
+    // serve the checkpointed offsets)
+    val q2 = sink()
+    try {
+      input.addData(b3); q2.processAllAvailable()
+    } finally q2.stop()
+    // batch ids continue from the checkpoint: nothing replayed twice,
+    // nothing skipped
+    val dirs = new java.io.File(target).list().filter(_.startsWith("b_")).sorted.toSeq
+    assert(dirs == Seq("b_000000000000", "b_000000000001", "b_000000000002"), dirs)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.head, "hour_epoch_s").collect().map(_.toSeq).toSeq
+    val streamed = canon(
+      EventStreams.ewmaProgress(spark, target).withColumnRenamed("key", "k"))
+    val batchRun = canon(graft.operators.TimeSeries
+      .ewmaSpikes((b1 ++ b2 ++ b3).toDF("k", "ts"), "k", "ts"))
+    assert(streamed == batchRun && streamed.nonEmpty)
   }
 
   test("funnelIngestSink: stream-then-read equals one batch funnel; late arrivals re-route; noise dropped") {
